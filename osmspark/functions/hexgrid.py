@@ -592,22 +592,42 @@ def claim_m_udf(res: int):
 
 
 # --- Spark surface ---------------------------------------------------------
+def _q(name: str) -> str:
+    """Backquoted SQL identifier for a column name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _d(x: float) -> str:
+    """SQL DOUBLE literal.  The D suffix matters: a bare `0.5` parses as
+    DECIMAL, which would change every downstream type and the plan."""
+    return f"{float(x)!r}D"
+
+
 def with_hex_cell_native(df, res: int, lat="lat", lon="lon", out_col=None):
-    """Hex cell id via PURE NATIVE column expressions — the whole
+    """Hex cell id via PURE NATIVE expressions — the whole
     latlon -> xyz -> face/uv -> rotated axial -> cube-round -> pack chain in
     built-in functions, so cell assignment stays inside whole-stage codegen
     (no Python in the headline spatial path; round-2 perf item).
 
-    STAGED on purpose: each step is a separate select() defining named
+    STAGED on purpose: each step is a separate projection defining named
     intermediates, so every value is computed ONCE per row.  Building this
-    as one nested Column expression duplicates each subtree at every
-    reference (Catalyst expressions are trees, not DAGs) — measured 6x
-    SLOWER than the Arrow UDF before staging.  CollapseProject keeps the
-    stages separate because the intermediates are non-cheap and
+    as one nested expression duplicates each subtree at every reference
+    (Catalyst expressions are trees, not DAGs) — measured 6x SLOWER than
+    the Arrow UDF before staging.  CollapseProject keeps the stages
+    separate because the intermediates are non-cheap and
     multiply-referenced; codegen pipelines them with local variables.
 
+    The stages are SQL TEXT (`selectExpr`), not Column objects: building
+    the same chain from ~150 Column expressions cost ~2.5k py4j round trips
+    (0.25-0.34 s of driver time per call on a 4-core host, paid several
+    times per kNN call), the SQL text costs one call per stage, and the
+    optimized plan is identical.  Two rules keep it identical: constants are DOUBLE
+    literals (`_d`), and no stage references an alias defined in the SAME
+    stage — Spark's lateral column alias would resolve it by inlining the
+    aliased expression, silently undoing the staging.
+
     Bit-parity with the numpy path (`latlon_to_cell`): same constants, same
-    rounding (F.rint == np.rint, half-even); JVM-vs-numpy trig can differ by
+    rounding (rint == np.rint, half-even); JVM-vs-numpy trig can differ by
     ~1 ulp, which can flip a point sitting EXACTLY on a cell boundary to the
     adjacent cell — harmless for the join/kNN contracts (covers pad by >=
     one circumradius; kNN bounds are metric) and asserted absent in tests."""
@@ -615,77 +635,65 @@ def with_hex_cell_native(df, res: int, lat="lat", lon="lon", out_col=None):
         raise ValueError("res must be in [0, 15]")
     out_col = out_col or f"hex_r{res}"
     radius, c, s = _res_frame(res)
-    C = F.col
-    lat_r, lon_r = F.radians(C(lat)), F.radians(C(lon))
-    cl = F.cos(lat_r)
-    s1 = df.select(
+    la, lo = f"radians({_q(lat)})", f"radians({_q(lon)})"
+    s1 = df.selectExpr(
         "*",
-        (cl * F.cos(lon_r)).alias("__hx"),
-        (cl * F.sin(lon_r)).alias("__hy"),
-        F.sin(lat_r).alias("__hz"),
+        f"cos({la}) * cos({lo}) AS __hx",
+        f"cos({la}) * sin({lo}) AS __hy",
+        f"sin({la}) AS __hz",
     )
-    ax, ay, az = F.abs(C("__hx")), F.abs(C("__hy")), F.abs(C("__hz"))
-    face0 = (
-        F.when((ax >= ay) & (ax >= az), F.lit(0))
-        .when(ay >= az, F.lit(1))
-        .otherwise(F.lit(2))
-    )
-    s2 = s1.select("*", face0.alias("__hf0"))
-    major = (
-        F.when(C("__hf0") == 0, C("__hx"))
-        .when(C("__hf0") == 1, C("__hy"))
-        .otherwise(C("__hz"))
-    )
-    s3 = s2.select(
+    s2 = s1.selectExpr(
         "*",
-        F.when(major < 0, C("__hf0") + F.lit(3))
-        .otherwise(C("__hf0")).alias("__hface"),
+        "CASE WHEN abs(__hx) >= abs(__hy) AND abs(__hx) >= abs(__hz) THEN 0"
+        " WHEN abs(__hy) >= abs(__hz) THEN 1 ELSE 2 END AS __hf0",
     )
-    u = (
-        F.when(C("__hface") == 0, C("__hy") / C("__hx"))
-        .when(C("__hface") == 1, -C("__hx") / C("__hy"))
-        .when(C("__hface") == 2, -C("__hx") / C("__hz"))
-        .when(C("__hface") == 3, C("__hz") / C("__hx"))
-        .when(C("__hface") == 4, C("__hz") / C("__hy"))
-        .otherwise(-C("__hy") / C("__hz"))
-    )
-    v = (
-        F.when(C("__hface") == 0, C("__hz") / C("__hx"))
-        .when(C("__hface") == 1, C("__hz") / C("__hy"))
-        .when(C("__hface") == 2, -C("__hy") / C("__hz"))
-        .when(C("__hface") == 3, C("__hy") / C("__hx"))
-        .when(C("__hface") == 4, -C("__hx") / C("__hy"))
-        .otherwise(-C("__hx") / C("__hz"))
-    )
-    s4 = s3.select("*", u.alias("__hu"), v.alias("__hv"))
-    xr = C("__hu") * F.lit(c) + C("__hv") * F.lit(s)
-    yr = -C("__hu") * F.lit(s) + C("__hv") * F.lit(c)
-    s5 = s4.select("*", xr.alias("__hxr"), yr.alias("__hyr"))
-    qf = (F.lit(_SQRT3 / 3.0) * C("__hxr") - C("__hyr") / F.lit(3.0)) / F.lit(radius)
-    rf = (F.lit(2.0 / 3.0) * C("__hyr")) / F.lit(radius)
-    s6 = s5.select("*", qf.alias("__hqf"), rf.alias("__hrf"),
-                   (-qf - rf).alias("__hsf"))
-    s7 = s6.select(
+    s3 = s2.selectExpr(
         "*",
-        F.rint(C("__hqf")).alias("__hq0"),
-        F.rint(C("__hrf")).alias("__hr0"),
-        F.rint(C("__hsf")).alias("__hs0"),
+        "CASE WHEN CASE WHEN __hf0 = 0 THEN __hx WHEN __hf0 = 1 THEN __hy"
+        " ELSE __hz END < 0 THEN __hf0 + 3 ELSE __hf0 END AS __hface",
     )
-    dq = F.abs(C("__hq0") - C("__hqf"))
-    dr = F.abs(C("__hr0") - C("__hrf"))
-    ds = F.abs(C("__hs0") - C("__hsf"))
-    s8 = s7.select("*", dq.alias("__hdq"), dr.alias("__hdr"), ds.alias("__hds"))
-    fix_q = (C("__hdq") > C("__hdr")) & (C("__hdq") > C("__hds"))
-    fix_r = ~fix_q & (C("__hdr") > C("__hds"))
+    s4 = s3.selectExpr(
+        "*",
+        "CASE WHEN __hface = 0 THEN __hy / __hx"
+        " WHEN __hface = 1 THEN -__hx / __hy"
+        " WHEN __hface = 2 THEN -__hx / __hz"
+        " WHEN __hface = 3 THEN __hz / __hx"
+        " WHEN __hface = 4 THEN __hz / __hy"
+        " ELSE -__hy / __hz END AS __hu",
+        "CASE WHEN __hface = 0 THEN __hz / __hx"
+        " WHEN __hface = 1 THEN __hz / __hy"
+        " WHEN __hface = 2 THEN -__hy / __hz"
+        " WHEN __hface = 3 THEN __hy / __hx"
+        " WHEN __hface = 4 THEN -__hx / __hy"
+        " ELSE -__hx / __hz END AS __hv",
+    )
+    s5 = s4.selectExpr(
+        "*",
+        f"__hu * {_d(c)} + __hv * {_d(s)} AS __hxr",
+        f"-__hu * {_d(s)} + __hv * {_d(c)} AS __hyr",
+    )
+    qf = f"({_d(_SQRT3 / 3.0)} * __hxr - __hyr / {_d(3.0)}) / {_d(radius)}"
+    rf = f"({_d(2.0 / 3.0)} * __hyr) / {_d(radius)}"
+    s6 = s5.selectExpr(
+        "*", f"{qf} AS __hqf", f"{rf} AS __hrf", f"-({qf}) - ({rf}) AS __hsf",
+    )
+    s7 = s6.selectExpr(
+        "*", "rint(__hqf) AS __hq0", "rint(__hrf) AS __hr0",
+        "rint(__hsf) AS __hs0",
+    )
+    s8 = s7.selectExpr(
+        "*", "abs(__hq0 - __hqf) AS __hdq", "abs(__hr0 - __hrf) AS __hdr",
+        "abs(__hs0 - __hsf) AS __hds",
+    )
+    fix_q = "(__hdq > __hdr AND __hdq > __hds)"
+    fix_r = f"(NOT {fix_q} AND __hdr > __hds)"
     # when fix_r holds, fix_q is false, so the q in (-q - s) is still q0
-    q = F.when(fix_q, -C("__hr0") - C("__hs0")).otherwise(C("__hq0")).cast("long")
-    r = F.when(fix_r, -C("__hq0") - C("__hs0")).otherwise(C("__hr0")).cast("long")
-    s9 = s8.select("*", q.alias("__hq"), r.alias("__hr"))
-    packed = (
-        F.shiftleft(F.lit(res).cast("long"), 59)
-        .bitwiseOR(F.shiftleft(C("__hface").cast("long"), 56))
-        .bitwiseOR(F.shiftleft(C("__hq") + F.lit(_OFF), 28))
-        .bitwiseOR(C("__hr") + F.lit(_OFF))
+    s9 = s8.selectExpr(
+        "*",
+        f"CAST(CASE WHEN {fix_q} THEN -__hr0 - __hs0 ELSE __hq0 END"
+        " AS BIGINT) AS __hq",
+        f"CAST(CASE WHEN {fix_r} THEN -__hq0 - __hs0 ELSE __hr0 END"
+        " AS BIGINT) AS __hr",
     )
     # coalesce to a sentinel: (a) null coords -> -1, which matches no real
     # cell in any equi-join (inner joins drop them, same as the UDF path's
@@ -694,9 +702,14 @@ def with_hex_cell_native(df, res: int, lat="lat", lon="lon", out_col=None):
     # staged projects by INLINING the whole expression tree into the
     # filter, which re-created the 6x duplication blowup this staging
     # exists to avoid (measured; see plan in EXPLAINS.md).
-    packed = F.coalesce(packed, F.lit(-1).cast("long"))
+    packed = (
+        f"coalesce(shiftleft(CAST({res} AS BIGINT), 59)"
+        " | shiftleft(CAST(__hface AS BIGINT), 56)"
+        f" | shiftleft(__hq + {_OFF}, 28) | (__hr + {_OFF}),"
+        " CAST(-1 AS BIGINT))"
+    )
     tmp = [col for col in s9.columns if col.startswith("__h")]
-    return s9.select("*", packed.alias(out_col)).drop(*tmp)
+    return s9.selectExpr("*", f"{packed} AS {_q(out_col)}").drop(*tmp)
 
 
 def hex_cell_udf(res: int):
@@ -713,7 +726,7 @@ def hex_cell_udf(res: int):
 def with_hex_cell(df, res: int, lat="lat", lon="lon", out_col=None,
                   native: bool = True):
     """Adds the hex cell column.  native=True (default) uses the staged
-    column-expression path (whole-stage codegen, zero Python);
+    SQL-expression path (whole-stage codegen, zero Python);
     native=False keeps the Arrow pandas UDF (numpy) path — tested equal."""
     out_col = out_col or f"hex_r{res}"
     if native:

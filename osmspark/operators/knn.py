@@ -5,8 +5,18 @@ query set, enumerated candidate k-ring cells in driver numpy and shipped
 them back via createDataFrame — a driver ceiling at ~10^5 queries; round-2
 VERDICT item 4).  Now candidate cells are generated by an Arrow pandas UDF
 ON the queries DataFrame, active/done state lives in (local-checkpointed)
-DataFrames, and the only per-round driver values are two scalars (active
-count, candidate-row estimate).  There is no query-count cap.
+DataFrames, and there is no query-count cap.
+
+Round bookkeeping costs no job of its own: `Observation`s ride on the
+checkpoints that run anyway.  The prep checkpoint counts the hopeless
+queries and the active queries per ring value; each round's top-k
+checkpoint counts, per ring value, the queries that finished (doneness is
+flagged inside the ranking window, so no groupBy or join decides it).
+From these counts the driver keeps a ring histogram, which gives the exact
+active count, the candidate-row estimate, the ring-overflow count and the
+brute-force leftover count — when to stop, which join regime to use and
+whether a fallback is needed, without collecting from the query state.
+One `osmspark.knn` DEBUG log record per call carries these counts.
 
 Scale design (unchanged where it was already right):
   * occupancy-adaptive prefilter resolution — under hot-city skew a coarse
@@ -50,10 +60,11 @@ as the oracle and for tiny point sets.
 
 from __future__ import annotations
 
+import logging
 import math
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions import hexgrid
@@ -65,6 +76,16 @@ BRUTE_RING_CAP = 32
 # broadcast the candidate (query x ring-cell) side while its estimated row
 # count stays under this; beyond it, let the shuffle join handle it
 BROADCAST_CAND_ROWS = 4_000_000
+# broadcast a key table — the base-res density counts, a round's done
+# query ids — into its join while it has at most this many rows (both
+# counts are known on the driver before the join); beyond it, a shuffle join
+BROADCAST_KEY_ROWS = 1_000_000
+# `active` is checkpointed every round above this many active queries, and
+# at least every ACTIVE_CHAIN_DEPTH rounds below it
+LAZY_ACTIVE_MAX = 5000
+ACTIVE_CHAIN_DEPTH = 4
+
+_log = logging.getLogger("osmspark.knn")
 
 
 def _dist_col(metric: str, qlat, qlon, plat, plon):
@@ -208,16 +229,13 @@ def knn_kring(
 
     Per round: candidate cells are the active queries' k-rings (pandas UDF
     + explode), joined to the cell-indexed points (broadcast while the
-    candidate side is small), top-k per query by window, done-ness decided
-    by comparing the k-th distance against the ring-coverage bound.  Done
-    queries' top-k rows stay in local-checkpointed DataFrames unioned at
-    the end — results never visit the driver."""
+    candidate side is small), top-k per query by window, done-ness flagged
+    in the same window by comparing the k-th distance against the
+    ring-coverage bound.  Done queries' top-k rows stay in
+    local-checkpointed DataFrames unioned at the end — results never visit
+    the driver; only the Observation counts do (module docstring)."""
     from functools import reduce
 
-    import os
-    import time as _time
-
-    dbg = os.environ.get("OSMSPARK_KNN_DEBUG") == "1"
     spark = points.sparkSession
 
     def _pts(res_: int):
@@ -238,12 +256,10 @@ def knn_kring(
     # full fine-res cellcnt shuffle (1.2M groups at res 13) the old path
     # paid per call.  The fine-res table is then assigned once.  The
     # ring-1 density estimate now comes from the query's BASE cell count
-    # scaled by 7^-steps (a broadcast map join) instead of a ring-1
-    # explode + shuffle join — estimator-only: a worse estimate costs a
-    # doubling round, never correctness.
-    _t = _time.time()
+    # scaled by 7^-steps (a map join) instead of a ring-1 explode +
+    # shuffle join — estimator-only: a worse estimate costs a doubling
+    # round, never correctness.
     target_occ = max(32, 2 * k)
-    to_unpersist: list[DataFrame] = []
     if points_cell_col is not None:
         # validate the pinned layout cell column cheaply (round-3 ADVICE):
         # a column assigned at a DIFFERENT resolution would match nothing
@@ -274,47 +290,41 @@ def knn_kring(
         # (round 6): grouping the layout's fine cells directly was a
         # 10^6-group shuffle per call (res 13 holds ~2 points/cell); one
         # codegen re-assign of the CACHED p at res 8 plus a tiny groupBy
-        # is cheaper and feeds the same broadcast have1 estimate.  At
-        # res <= 8 the pinned cells are already coarse — group them as-is.
+        # is cheaper and feeds the same have1 estimate.  At res <= 8 the
+        # pinned cells are already coarse — group them as-is.
         if res <= 8:
             base_res, steps = res, 0
-            cnt_base = p.groupBy(F.col("pcell").alias("pcell")).agg(
-                F.count("*").alias("cnt"))
+            base = p.withColumn("__pc8", F.col("pcell"))
         else:
             base_res, steps = 8, res - 8
-            cnt_base = (
-                hexgrid.with_hex_cell(p, base_res, lat="plat", lon="plon",
-                                      out_col="__pc8")
-                .groupBy(F.col("__pc8").alias("pcell"))
-                .agg(F.count("*").alias("cnt"))
-            )
-        to_unpersist += [p]
+            base = hexgrid.with_hex_cell(p, base_res, lat="plat",
+                                         lon="plon", out_col="__pc8")
+        cnt_base = (
+            base.groupBy(F.col("__pc8").alias("pcell"))
+            .agg(F.count("*").alias("cnt")).persist()
+        )
     else:
-        base_res = res
+        base_res, steps = res, 0
         cnt_base = (
             _pts(base_res).groupBy("pcell")
             .agg(F.count("*").alias("cnt")).persist()
         )
-        max_occ = cnt_base.agg(F.max("cnt")).collect()[0][0] or 0
-        steps = 0
-        if max_occ > 4 * target_occ:
+    # one job: the max drives the refine, the row count guards the
+    # density broadcast below
+    max_occ, n_base_cells = cnt_base.agg(
+        F.max("cnt"), F.count("*")).collect()[0]
+    if points_cell_col is None:
+        if (max_occ or 0) > 4 * target_occ:
             steps = max(0, min(
                 int(math.ceil(math.log(max_occ / target_occ, 7))),
                 15 - base_res,
             ))
         res = base_res + steps
         p = _pts(res).persist()
-        to_unpersist += [p, cnt_base]
-    if dbg:
-        print(f"KNN assign res={res} {_time.time()-_t:.2f}s", flush=True)
+    to_unpersist = [p, cnt_base]
 
-    # query prep: cell, local radius, density-estimated start ring —
-    # staged selects, all distributed
-    # (round 6: the `radius_m` pandas-UDF column that used to be added
-    # here was DEAD — the round-5 uv-exact claim_m bound replaced every
-    # consumer — yet the prep checkpoint still materialized it through an
-    # ArrowEvalPython stage on every call; prep is now pure codegen)
-    #
+    # query prep: cell, density-estimated start ring — staged selects, all
+    # distributed and pure codegen
     try:
         _nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
@@ -336,11 +346,14 @@ def knn_kring(
         r *= 2
     sched = F.array(*[F.lit(s) for s in ring_schedule])
     # ring-1 density estimate (both paths): the query's BASE-res cell
-    # count scaled to 7 final-res cells (broadcast map join — no explode,
-    # no shuffle); a missing base cell means locally empty territory,
-    # same semantics as the old have1 == 0
-    c8 = F.broadcast(cnt_base.select(
-        F.col("pcell").alias("__qc8"), F.col("cnt").alias("__c8")))
+    # count scaled to 7 final-res cells (map join — no explode); a missing
+    # base cell means locally empty territory.  The count table is
+    # broadcast only while it is small: a continental point table holds
+    # 10^7+ base cells, which go through a sort-merge join instead.
+    c8 = cnt_base.select(F.col("pcell").alias("__qc8"),
+                         F.col("cnt").alias("__c8"))
+    density_bcast = n_base_cells <= BROADCAST_KEY_ROWS
+    c8 = F.broadcast(c8) if density_bcast else c8.hint("MERGE")
     if base_res == res:
         q8 = q0.withColumn("__qc8", F.col("qcell"))
     else:
@@ -367,7 +380,7 @@ def knn_kring(
             F.when(empty1, F.lit(8)).otherwise(r_est),
             F.lit(start_ring),
         ).cast("int").alias("__rest"),
-    ).drop("__qc8", "__c8", "have1")
+    ).drop("__qc8", "__c8")
     # pre-snap cap check (ADVICE fix: compare the ESTIMATE, not the
     # schedule-clamped value) — hopeless queries go straight to brute force
     n_before = F.aggregate(
@@ -384,33 +397,49 @@ def knn_kring(
 
     # checkpoint the PREP RESULT once, then split: both the active set and
     # the hopeless brute route filter the same materialized frame, so the
-    # hex-assign + radius-UDF + density-join prep chain runs exactly once
-    # (an un-checkpointed hopeless branch was re-running the whole prep
-    # over all queries when the final leftover union materialized)
-    if dbg:
-        _t = _time.time()
-    qe = qe.localCheckpoint(eager=True)
-    if dbg:
-        print(f"KNN prep {_time.time()-_t:.2f}s", flush=True)
-    brute_parts: list[DataFrame] = [
-        qe.filter(F.col("__hopeless")).drop("__hopeless")
-    ]
-    active = qe.filter(~F.col("__hopeless")).drop("__hopeless")
+    # hex-assign + density-join prep chain runs exactly once.  Its
+    # Observation seeds the ring histogram.
+    hopeless = F.col("__hopeless")
+    prep_obs = Observation()
+    qe = qe.observe(
+        prep_obs,
+        F.count(F.when(hopeless, True)).alias("hopeless"),
+        *[F.count(F.when(~hopeless & (F.col("ring") == s), True)).alias(
+            f"r{s}") for s in ring_schedule],
+    ).localCheckpoint(eager=True)
+    prep = prep_obs.get
+    hist = {s: prep[f"r{s}"] for s in ring_schedule if prep[f"r{s}"]}
+    stats = {"res": res,
+             "density_join": "broadcast" if density_bcast else "merge",
+             "hopeless": prep["hopeless"], "rounds": [], "overflow": 0}
+    brute_parts: list[DataFrame] = []
+    if prep["hopeless"]:
+        brute_parts.append(qe.filter(hopeless).drop("__hopeless"))
+    active = qe.filter(~hopeless).drop("__hopeless")
 
     kring_sp = hexgrid.kring_spill_udf(res)
+    w = Window.partitionBy("query_id").orderBy(F.asc("dist"),
+                                               F.asc("point_id"))
+    # the k-th distance (null below k candidates) -> conservative meters
+    # for the coverage-bound comparison.  A second, unordered window over
+    # the <= k kept rows: a frame-wide function in the ranking window
+    # itself would disable Spark's partial top-k below the shuffle
+    # (WindowGroupLimit), shipping every candidate pair instead of k
+    kth = F.max(F.when(F.col("rank") == k, F.col("dist"))).over(
+        Window.partitionBy("query_id"))
+    kth_m = F.sqrt(kth) * F.lit(111_320.0) if metric == "sq_deg" else kth
     result_dfs: list[DataFrame] = []
+    depth = 0  # anti-joins stacked on `active` since its last checkpoint
     for _ in range(max_rounds):
-        stats = active.agg(
-            F.count("*").alias("n"),
-            F.sum(1 + 3 * F.col("ring") * (F.col("ring") + 1)).alias("cand"),
-        ).collect()[0]
-        n_active, est_cand = stats["n"], stats["cand"]
-        if not n_active:
+        if not hist:
             break
-        if dbg:
-            print(f"KNN round: active={n_active} est_cand={est_cand}",
-                  flush=True)
-            _t0 = _time.time()
+        n_active = sum(hist.values())
+        est_cand = sum(n * (1 + 3 * r * (r + 1)) for r, n in hist.items())
+        shuffle = est_cand > BROADCAST_CAND_ROWS
+        stats["rounds"].append({
+            "active": n_active, "est_cand": est_cand,
+            "regime": "shuffle" if shuffle else "broadcast",
+        })
         # covered_m is the DONENESS CLAIM — hexgrid.claim_m, the uv-exact
         # bound on what kring(ring) provably covers (the old measured-R
         # formula 1.5*R*ring - R over-claimed near face edges where the
@@ -434,18 +463,19 @@ def knn_kring(
         # UDF beats 64 near-empty tasks — repartition only when the
         # estimate crosses the broadcast threshold, to the session's
         # shuffle-partition count (scale-adaptive, not a local constant).
-        if est_cand > BROADCAST_CAND_ROWS:
+        if shuffle:
             active = active.repartition(
                 _nparts, "query_id").localCheckpoint(eager=True)
+            depth = 0
         cand = active.select(
-            "query_id", "qlat", "qlon",
+            "query_id", "qlat", "qlon", "ring",
             covered.alias("covered_m"),
             F.explode(
                 kring_sp(F.col("qcell"), F.col("qlat"), F.col("qlon"),
                          F.col("ring"), covered)
             ).alias("pcell"),
         )
-        if est_cand <= BROADCAST_CAND_ROWS:
+        if not shuffle:
             cand = F.broadcast(cand)
             src_p = p
         else:
@@ -466,73 +496,76 @@ def knn_kring(
             _dist_col(metric, F.col("qlat"), F.col("qlon"),
                       F.col("plat"), F.col("plon")),
         )
-        w = Window.partitionBy("query_id").orderBy(F.asc("dist"),
-                                                   F.asc("point_id"))
         # materialize this round's top-k ONCE (n_active*k rows,
-        # distributed); the stats agg, the kept-results semi-join and the
-        # next active set all read the checkpoint
+        # distributed) with a per-row done flag: the query has a rank-k
+        # row and its k-th distance is within the ring's claim.  The
+        # round's results and the next active set both filter the
+        # checkpoint; its Observation counts the finished queries per ring
+        done_obs = Observation()
+        first_done = F.col("done") & (F.col("rank") == 1)
         topk = (
             joined.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "point_id", "dist", "covered_m")
+            .select(
+                "query_id", "rank", "point_id", "dist", "ring",
+                F.coalesce(kth_m <= F.col("covered_m"),
+                           F.lit(False)).alias("done"),
+            )
+            .observe(done_obs, *[
+                F.count(F.when(first_done & (F.col("ring") == s), True))
+                .alias(f"r{s}") for s in hist])
             .localCheckpoint(eager=True)
         )
-        # dist -> conservative meters for the coverage-bound comparison
-        kth_m = (F.sqrt(F.max("dist")) * F.lit(111_320.0)
-                 if metric == "sq_deg" else F.max("dist"))
-        done = (
-            topk.groupBy("query_id")
-            .agg(kth_m.alias("kth_m"), F.count("*").alias("n"),
-                 F.first("covered_m").alias("covered_m"))
-            .filter((F.col("n") == k) & (F.col("kth_m") <= F.col("covered_m")))
-            .select("query_id")
-        )
-        result_dfs.append(
-            topk.join(F.broadcast(done), "query_id")
-            .select("query_id", "rank", "point_id", "dist")
-        )
+        n_done = done_obs.get
+        result_dfs.append(topk.filter("done").select(
+            "query_id", "rank", "point_id", "dist"))
         # queries with no candidates this round simply stay active (left
         # anti join keeps them); ring doubles; overflow leaves for brute.
-        # `active` stays LAZY for small batches (round 6): it is the qe
-        # checkpoint anti-joined with the accumulated per-round done sets,
-        # each derived from a checkpointed topk — for a few-thousand-query
-        # batch re-evaluating that chain is cheaper than the one-job-per-
-        # round eager checkpoint it replaces (the round fixed cost was the
-        # kNN bottleneck at small query counts).  For LARGE batches the
-        # chain itself is the cost — every consumer (stats, cand,
-        # leftover, final union) re-scans the full qe and re-aggregates
-        # the 10^6-row topk — so past the threshold the round still
-        # checkpoints eagerly, executing the chain exactly once.
+        # `active` stays a LAZY chain — the qe checkpoint anti-joined
+        # with the per-round done sets, each a filter of a checkpointed
+        # topk — except for large batches, where re-evaluating it costs
+        # more than one checkpoint job, and every ACTIVE_CHAIN_DEPTH
+        # rounds, which bounds the chain for long-running small batches.
+        nxt_hist, overflow = {}, 0
+        for r, n in hist.items():
+            left = n - n_done[f"r{r}"]
+            if 2 * r > max_ring:
+                overflow += left
+            elif left:
+                nxt_hist[2 * r] = left
+        done_ids = topk.filter(first_done).select("query_id")
+        if sum(n_done.values()) <= BROADCAST_KEY_ROWS:
+            done_ids = F.broadcast(done_ids)
         nxt = (
-            active.join(done, "query_id", "left_anti")
+            active.join(done_ids, "query_id", "left_anti")
             .withColumn("ring", F.col("ring") * 2)
         )
-        brute_parts.append(nxt.filter(F.col("ring") > max_ring))
+        if overflow:
+            brute_parts.append(nxt.filter(F.col("ring") > max_ring))
+            stats["overflow"] += overflow
         active = nxt.filter(F.col("ring") <= max_ring)
-        if n_active > 5000:
+        hist = nxt_hist
+        depth += 1
+        if hist and (n_active > LAZY_ACTIVE_MAX
+                     or depth >= ACTIVE_CHAIN_DEPTH):
             active = active.localCheckpoint(eager=True)
-        if dbg:
-            print(f"KNN round took {_time.time()-_t0:.2f}s", flush=True)
+            depth = 0
     # long-tail fallback: hopeless + ring-overflow + round-budget leftovers
     # in one single-pass brute force (they are few by construction; the
-    # union is a lazy chain over checkpointed parents — cheap to evaluate
-    # twice, so no extra materialization job)
-    leftover = reduce(DataFrame.unionByName, brute_parts + [active]).select(
-        "query_id", F.col("qlat").alias("lat"), F.col("qlon").alias("lon")
-    )
-    if dbg:
-        _t = _time.time()
-    has_leftover = leftover.limit(1).count()
-    if dbg:
-        print(f"KNN leftover check {_time.time()-_t:.2f}s", flush=True)
-    if has_leftover:
-        if dbg:
-            print(f"KNN fallback brute queries: {leftover.count()}",
-                  flush=True)
+    # union is a lazy chain over checkpointed parents)
+    if hist:
+        brute_parts.append(active)
+    stats["leftover"] = (stats["hopeless"] + stats["overflow"]
+                         + sum(hist.values()))
+    if brute_parts:
+        leftover = reduce(DataFrame.unionByName, brute_parts).select(
+            "query_id", F.col("qlat").alias("lat"), F.col("qlon").alias("lon")
+        )
         result_dfs.append(
             knn_bruteforce(points, leftover, k, metric=metric,
                            point_id=point_id)
         )
+    _log.debug("knn_kring %s", stats)
 
     for df_ in to_unpersist:
         df_.unpersist()

@@ -161,6 +161,39 @@ def test_hex_native_expression_matches_numpy(spark):
         assert n_diff == 0, f"res {res}: {n_diff}/{n} cells differ"
 
 
+def test_hex_native_plan_stays_staged(spark):
+    """The SQL-text stages must survive optimization as separate
+    projections: radians appears only in the bottom (xyz) stage — 3x of
+    lat and 2x of lon — and in no later stage, which any inlining of an
+    intermediate (a same-stage alias, a collapsed project) would break.
+    Nine projections remain: the single-use q/r stage folds into the
+    final pack, as it did with Column-built stages."""
+    import re
+
+    df = spark.createDataFrame([(1.3, 103.8)], "lat double, lon double")
+    for res in (8, 13):
+        plan = (hexgrid.with_hex_cell_native(df, res)._jdf.queryExecution()
+                .optimizedPlan().toString())
+        stages = [ln for ln in plan.splitlines() if "Project [" in ln]
+        assert len(stages) == 9
+        assert [ln for ln in stages if "RADIANS(" in ln] == [stages[-1]]
+        assert sorted(re.findall(r"RADIANS\((\w+)#", plan)) == [
+            "lat", "lat", "lat", "lon", "lon"]
+
+
+def test_hex_native_quoted_column_names(spark):
+    """Column names are backquoted into the SQL-text stages, so names with
+    spaces, dots or backticks work and give the same cells."""
+    df = spark.createDataFrame([(1.3, 103.8), (-33.87, 151.21)],
+                               "lat double, lon double")
+    odd = df.toDF("my lat", "a.b`lon")
+    want = [r["c"] for r in hexgrid.with_hex_cell_native(
+        df, 9, out_col="c").collect()]
+    got = [r["c x"] for r in hexgrid.with_hex_cell_native(
+        odd, 9, lat="my lat", lon="a.b`lon", out_col="c x").collect()]
+    assert got == want
+
+
 def test_hex_native_null_coords_sentinel(spark):
     """Null coords -> sentinel -1 (non-nullable output so joins on the
     cell emit no isnotnull pushdown; -1 matches no real cell)."""
